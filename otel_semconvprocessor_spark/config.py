@@ -35,8 +35,8 @@ VALID_SPAN_KINDS = frozenset({"server", "client", "producer", "consumer", "inter
 @dataclass
 class OTTLRule:
     """One rule (config.go:62-82). ``schema_url`` is the graft's addition: the
-    semconv schema version this rule row belongs to, used by the
-    broadcast-joined rule-table variant (BASELINE.json north_star)."""
+    semconv schema version this rule belongs to ("" = every version),
+    dispatched by the cascade's broadcast join (operators/rules.py)."""
 
     id: str
     priority: int

@@ -1,10 +1,11 @@
 """Operator surface. Import from the submodules:
 
-  rules       apply_rules, compile_rule_columns
+  rules       apply_rules (schema_url-dispatched cascade), compile_rule_columns
+  rules_broadcast  apply_rules_broadcast (alias of apply_rules)
   extract     extract_pages (pandas/Arrow), extract_pages_native
   enrich      insert_attrs_if_absent, apply_semconv_mappings, join_dims
-  route       assign_sink, write_routed_single_pass, write_per_sink_tables,
-              salted_repartition
+  route       sink_frame, slim_for_sink, assign_sink, write_routed_single_pass,
+              write_per_sink_tables, salted_repartition
   metrics     rule_effectiveness, cardinality_summary, metrics_manifest
   exporters   debug_sample, write_with_rotation, duration_histogram
   dedup       exact_dedup_groups, dedup_exact, minhash_lsh_pairs,

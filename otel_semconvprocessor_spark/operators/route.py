@@ -36,6 +36,7 @@ __all__ = [
     "route_predicates",
     "salt_expr",
     "salted_repartition",
+    "sink_frame",
     "slim_for_sink",
     "write_routed_single_pass",
     "write_per_sink_tables",
@@ -115,8 +116,7 @@ _ATTR_TO_COLUMN = {
 }
 
 
-def slim_for_sink(df: DataFrame, *, binary_ids: bool = True,
-                  dedup_attrs: bool = True) -> DataFrame:
+def slim_for_sink(df: DataFrame) -> DataFrame:
     """Information-preserving sink projection, applied BEFORE the write-side
     repartition so the shuffle payload shrinks with the files.
 
@@ -139,7 +139,7 @@ def slim_for_sink(df: DataFrame, *, binary_ids: bool = True,
     memory-bus traffic through shuffle + parquet encode + tmpfs write).
     """
     out = df
-    if dedup_attrs and "attrs" in out.columns:
+    if "attrs" in out.columns:
         def entry_is_dup(k, v):
             cond = F.lit(False)
             if "trace_id" in df.columns and "span_id" in df.columns:
@@ -155,11 +155,23 @@ def slim_for_sink(df: DataFrame, *, binary_ids: bool = True,
         out = out.withColumn(
             "attrs", F.map_filter("attrs", lambda k, v: ~entry_is_dup(k, v))
         )
-    if binary_ids:
-        for c in ("trace_id", "span_id"):
-            if c in out.columns:
-                out = out.withColumn(c, F.unhex(F.col(c)))
+    for c in ("trace_id", "span_id"):
+        if c in out.columns:
+            out = out.withColumn(c, F.unhex(F.col(c)))
     return out
+
+
+def sink_frame(normalized: DataFrame) -> DataFrame:
+    """The sink row every writer stores (batch, checkpoint and streaming):
+    the normalized record without its raw payloads, slimmed losslessly, with
+    its ``sink`` and ``warc_day`` partition columns.
+
+    Sinks carry NORMALIZED records, not raw payloads — the reference's
+    exporters write processed spans, not the original request bytes; at
+    10^12 rows the raw html/text would dominate shuffle + sink IO.  One
+    definition keeps resumed chunks, streamed micro-batches and batch runs
+    row-identical."""
+    return _with_day(assign_sink(slim_for_sink(normalized.drop("html", "text"))))
 
 
 def write_routed_single_pass(

@@ -23,7 +23,8 @@ whole-stage code-generated instead of per-row interpreted:
     296-301).
 
 Input contract: df has ``name:string``, ``kind:string`` (lowercase span-kind
-words), ``attrs:map<string,string>``.  Output adds:
+words), ``attrs:map<string,string>``, and — when any rule is versioned —
+``schema_url:string``.  Output adds:
 
   rule_id:string          matched rule id (NULL: skip-guarded or no match)
   operation_name:string   computed name for matched rows (NULL otherwise)
@@ -33,9 +34,22 @@ words), ``attrs:map<string,string>``.  Output adds:
   name_original:string    see above
   attrs:map               (replaced) updated attribute map
 
-Scale note: the cascade is pure expression work — no shuffle, no UDF, no
-joins; it fuses into the scan's WholeStageCodegen stage, so it costs ~0 extra
-passes at any data size.
+Schema-version dispatch: a rule may carry a semconv ``schema_url``, so old
+and new conventions can coexist in one corpus and a rule-set change is a
+table update, not a new code path.  The versioned rules become DATA — one
+broadcast row per ``schema_url`` holding the ordered seqs of the rules that
+apply to it — attached to each span by a broadcast LEFT equi-join (the span
+side never shuffles).  Each versioned rule's predicate is gated on
+``array_contains(applicable_seqs, seq)`` inside the same lazy first-match
+chain: the broadcast data decides which rules a span may match, the compiled
+Columns decide whether it does.  A cross-join + ``min(seq)`` resolution
+would pay x|rules| candidate amplification and two id-keyed shuffles
+(measured ~1.6x the chain at 1M rows, BENCH_r05).
+
+Scale note: with an all-wildcard rule set (the reference config) the cascade
+is pure expression work — no shuffle, no UDF, no join; it fuses into the
+scan's WholeStageCodegen stage, so it costs ~0 extra passes at any data
+size.  Versioned rules add only the tiny broadcast dispatch join.
 """
 
 from __future__ import annotations
@@ -46,12 +60,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import MODE_ENFORCE, Config
-from ..functions.ottl import (
-    AttrSource,
-    compile_ottl,
-    referenced_attr_keys,
-    value_expr_never_null,
-)
+from ..functions.ottl import compile_ottl, value_expr_never_null
 from ..functions.scalars import attr
 from ..tuning import ensure_jit_codegen
 
@@ -108,18 +117,20 @@ def apply_rules(
     attrs_col: str = "attrs",
     name_col: str = "name",
     kind_col: str = "kind",
-    pre_project_keys: bool = False,
+    schema_url_col: str | None = "schema_url",
 ) -> DataFrame:
     """Apply the processor to a span-shaped DataFrame (see module docstring).
 
-    ``pre_project_keys=True`` pre-evaluates every referenced attr key into a
-    hidden struct ONCE per row.  Output-identical; measured SLOWER on the
-    reference rule set (interleaved same-session A/B at local[8]/2M rows:
-    35.2s vs 20.3s min) — materializing a 26-string-field struct per row
-    costs more than the probes the lazy CASE actually skips, because
-    first-match-wins means the average row only evaluates a few rules'
-    predicates.  Kept as a hook: a rule set whose FIRST rules reuse many
-    keys would flip the trade."""
+    A rule with ``schema_url == ""`` is version-wildcard and applies to every
+    span; a versioned rule applies only to spans whose ``schema_url_col``
+    equals it.  Spans with NULL in that column see only wildcard rules.
+
+    If the rule set contains versioned rules and ``schema_url_col`` names a
+    column the frame does not have, that is a caller error (typo'd name, or
+    the column was dropped upstream) and raises — silently degrading to
+    wildcard-only matching would be invisible since the output schema is
+    unchanged.  Pass ``schema_url_col=None`` to opt into wildcard-only
+    matching explicitly."""
     ensure_jit_codegen(df.sparkSession)
     if not cfg.enabled or not cfg.span_processing.enabled:
         # processor.go:122-124 / 146-148: disabled => identity, but keep the
@@ -138,26 +149,35 @@ def apply_rules(
     name = F.col(name_col)
     kind = F.col(kind_col)
 
-    # Collect every attr key the rule set references (plus the skip-guard
-    # key); resolution strategy is chosen below.
-    keys: set[str] = {sp.operation_name_attribute}
-    for rule in sp.rules:
-        keys |= referenced_attr_keys(rule.condition)
-        keys |= referenced_attr_keys(rule.operation_name)
-        if rule.operation_type:
-            keys |= referenced_attr_keys(rule.operation_type)
-    key_list = sorted(keys)
-    if pre_project_keys:
-        ak = F.struct(
-            *[attr(attrs, k).alias(f"k{i}") for i, k in enumerate(key_list)]
+    has_schema = schema_url_col is not None and schema_url_col in df.columns
+    any_versioned = any(r.schema_url for r in sp.rules)
+    if any_versioned and schema_url_col is not None and not has_schema:
+        raise ValueError(
+            f"rule set has schema_url-versioned rules but column "
+            f"{schema_url_col!r} is not in the input ({df.columns}); pass "
+            "schema_url_col=None to opt into wildcard-only matching"
         )
-        df = df.withColumn("__ak", ak)
-        field = {k: F.col(f"__ak.k{i}") for i, k in enumerate(key_list)}
-    else:
-        field = {k: attr(attrs, k) for k in key_list}
-    src = AttrSource(attrs, lambda key: field.get(key, attr(attrs, key)))
 
-    compiled = compile_rule_columns(cfg, src, name, kind)
+    # Versioned dispatch DATA: one broadcast row per schema_url with the
+    # ordered applicable seq set.  Left join: a span whose version has no
+    # rule rows (or whose schema_url is NULL) gets NULL -> empty set.
+    dispatch_joined = any_versioned and has_schema
+    if dispatch_joined:
+        by_url: dict[str, list[int]] = {}
+        for seq, rule in enumerate(sp.rules):
+            if rule.schema_url:
+                by_url.setdefault(rule.schema_url, []).append(seq)
+        vseqs = df.sparkSession.createDataFrame(
+            sorted(by_url.items()), "schema_url string, __vseqs array<int>"
+        )
+        df = df.join(
+            F.broadcast(vseqs),
+            on=df[schema_url_col] == vseqs["schema_url"],
+            how="left",
+        ).drop(vseqs["schema_url"])
+        applicable_set = F.coalesce(F.col("__vseqs"), F.array().cast("array<int>"))
+
+    compiled = compile_rule_columns(cfg, attrs, name, kind)
 
     # One struct-valued CASE chain => each rule predicate is evaluated at most
     # once per row and evaluation stops at the first match (lazy CASE WHEN),
@@ -166,12 +186,23 @@ def apply_rules(
         "struct<rule_id:string,op_name:string,op_type:string>"
     )
     cascade = no_match
-    for c in reversed(compiled):
+    for seq, c in reversed(list(enumerate(compiled))):
         hit = F.struct(
             F.lit(c.rule_id).alias("rule_id"),
             c.operation_name.alias("op_name"),
             (c.operation_type if c.operation_type is not None else F.lit(None).cast("string")).alias("op_type"),
         )
+        pred = c.predicate
+        if sp.rules[seq].schema_url:
+            # versioned rule: applies only when the broadcast dispatch row
+            # lists it for this span's schema version (never, in
+            # wildcard-only mode)
+            gate = (
+                F.array_contains(applicable_set, F.lit(seq))
+                if dispatch_joined
+                else F.lit(False)
+            )
+            pred = gate & pred
         if c.name_nullable:
             # name-expr error => skip THIS rule and continue the cascade
             # (processor.go:244-250): fold name_expr IS NOT NULL into the
@@ -179,21 +210,18 @@ def apply_rules(
             # the value (2 evals on matched rows only); the alternative —
             # evaluating the hit struct once behind the predicate and testing
             # its op_name field — was measured 10% SLOWER on the 18-rule 1M-row
-            # cascade (12.30s vs 11.16s min-warm, scripts/cascade_attrib.py):
-            # the nested struct-valued CASE costs codegen more than the rare
-            # re-evaluation saves.
-            cascade = F.when(
-                c.predicate & c.operation_name.isNotNull(), hit
-            ).otherwise(cascade)
-        else:
-            cascade = F.when(c.predicate, hit).otherwise(cascade)
+            # cascade (12.30s vs 11.16s min-warm; the A/B harness is in git
+            # history): the nested struct-valued CASE costs codegen more than
+            # the rare re-evaluation saves.
+            pred = pred & c.operation_name.isNotNull()
+        cascade = F.when(pred, hit).otherwise(cascade)
 
     # Skip-guard (processor.go:202-206): pre-existing operation.name attribute
     # short-circuits the whole cascade.
-    guarded = F.when(field[sp.operation_name_attribute].isNull(), cascade)
+    guarded = F.when(attr(attrs, sp.operation_name_attribute).isNull(), cascade)
 
     out = finish_match(df.withColumn("__match", guarded), cfg, attrs_col, name_col)
-    return out.drop("__ak")
+    return out.drop("__vseqs")
 
 
 def finish_match(
@@ -202,13 +230,10 @@ def finish_match(
     attrs_col: str = "attrs",
     name_col: str = "name",
 ) -> DataFrame:
-    """Shared post-match stage: given a ``__match`` struct column
+    """Post-match stage: given a ``__match`` struct column
     (``struct<rule_id,op_name,op_type>``, NULL = skip-guarded or no match),
     produce the output contract — enforce/enrich naming, name.original
-    preservation, and the attribute-map update.  Used by both the CASE-chain
-    cascade above and the broadcast rule-table variant
-    (operators/rules_broadcast.py), which is how the two are cross-checked
-    to be identical."""
+    preservation, and the attribute-map update."""
     sp = cfg.span_processing
     attrs = F.col(attrs_col)
     name = F.col(name_col)

@@ -1,188 +1,24 @@
-"""Broadcast rule-table cascade: the schema-version-keyed variant.
+"""Former name of the schema_url-dispatched cascade.
 
-The CASE-chain cascade (operators/rules.py) compiles the rule set into one
-expression — the right plan when every span sees the same rules.  The
-north_star additionally requires the rule table as DATA keyed by semconv
-``schema_url`` and applied via a broadcast join ("schema-version keyed rule
-tables broadcast-joined, not per-row Python"): a span only sees the rule rows
-for its own schema version (plus version-wildcard rules), so different
-conventions can coexist in one corpus and rule-set changes are a table
-update, not a plan rebuild.
-
-Plan shape (round-6 restructure — and why it now matches the chain's cost):
-  * the rule table is aggregated to ONE broadcastable row per schema_url
-    carrying the ordered set of applicable rule seqs; spans attach their
-    set via a broadcast LEFT equi-join on schema_url (BroadcastHashJoin —
-    the span side never shuffles).  Version-wildcard rules apply to every
-    span and need no join at all.
-  * per-span evaluation is the SAME lazy first-match CASE chain the default
-    cascade uses, with each versioned rule's predicate additionally gated on
-    ``array_contains(applicable_seqs, seq)`` — the broadcast DATA decides
-    which rules a span may match, the compiled Columns decide whether it
-    does.  Chain order is the validated priority order, so first-match ==
-    the old min-over-seq resolution.
-  * ZERO shuffles of the span side.  The previous shape cross-joined every
-    span with all |rules| wildcard rows (x18 candidate amplification),
-    shuffled the matches for a groupBy(id).min(seq), then sort-merge-joined
-    the winners back — 2 full id-keyed exchanges plus the amplification,
-    measured ~1.6x the chain at 1M rows (18.46s vs 11.70s, BENCH_r05).  The
-    rewrite is output-identical (tests/test_rules_broadcast.py cross-checks
-    every column against apply_rules, and the schema-dispatch golden pins
-    versioned behavior).
-
-Reference parity: semantics identical to processor.go:192-324 — the shared
-``finish_match`` stage guarantees the enforce/enrich/attr-update behavior is
-the same code in both variants.
+The broadcast rule-table dispatch now lives in ``operators/rules.apply_rules``
+(one cascade for every caller); this alias keeps the old entry point.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..config import Config
-from ..functions.scalars import attr
-from ..tuning import ensure_jit_codegen
-from .rules import compile_rule_columns, finish_match
+from .rules import apply_rules
 
-__all__ = ["rules_table", "apply_rules_broadcast"]
-
-
-def rules_table(spark: SparkSession, cfg: Config) -> DataFrame:
-    """The rule set as a broadcastable table: one row per (schema_url, rule).
-
-    ``seq`` is the rule's position in the validated priority order — the
-    deterministic total order first-match resolution follows (priority ties
-    resolve like the CASE chain's declaration order)."""
-    rows = [
-        (r.schema_url, i, r.id, r.priority)
-        for i, r in enumerate(cfg.span_processing.rules)
-    ]
-    return spark.createDataFrame(
-        rows, "schema_url string, seq int, rule_id string, priority int"
-    )
+__all__ = ["apply_rules_broadcast"]
 
 
 def apply_rules_broadcast(
-    df: DataFrame,
-    cfg: Config,
-    *,
-    id_col: str,
-    attrs_col: str = "attrs",
-    name_col: str = "name",
-    kind_col: str = "kind",
-    schema_url_col: str | None = "schema_url",
+    df: DataFrame, cfg: Config, *, id_col: str | None = None, **kw
 ) -> DataFrame:
-    """Apply the processor via a broadcast-joined rule table keyed by
-    schema_url; output contract identical to ``apply_rules``.
-
-    ``id_col`` must uniquely identify a span (it anchors the per-span
-    first-match semantics; since the round-6 rewrite the resolution itself
-    is span-local, so the column is only validated, never shuffled on).  A
-    rule row with ``schema_url == ""`` is version-wildcard and applies to
-    every span; a versioned rule row applies only to spans whose
-    ``schema_url_col`` equals it.  Spans with NULL in that column see only
-    wildcard rules.
-
-    If the rule set contains versioned rules and ``schema_url_col`` names a
-    column the frame does not have, that is a caller error (typo'd name, or
-    the column was dropped upstream) and raises — silently degrading to
-    wildcard-only matching would be invisible since the output schema is
-    unchanged.  Pass ``schema_url_col=None`` to opt into wildcard-only
-    matching explicitly.
-    """
-    ensure_jit_codegen(df.sparkSession)
-    if not cfg.enabled or not cfg.span_processing.enabled:
-        return df.withColumns(
-            {
-                "rule_id": F.lit(None).cast("string"),
-                "operation_name": F.lit(None).cast("string"),
-                "operation_type": F.lit(None).cast("string"),
-                "name_original": F.lit(None).cast("string"),
-            }
-        )
-
-    if id_col not in df.columns:
+    """``apply_rules(df, cfg, **kw)``.  ``id_col``, when given, is only
+    checked to exist: resolution is span-local, so nothing keys on it."""
+    if id_col is not None and id_col not in df.columns:
         raise ValueError(f"id column {id_col!r} is not in the input ({df.columns})")
-
-    spark = df.sparkSession
-    sp = cfg.span_processing
-    attrs = F.col(attrs_col)
-    name = F.col(name_col)
-    kind = F.col(kind_col)
-
-    has_schema = schema_url_col is not None and schema_url_col in df.columns
-    any_versioned = any(r.schema_url for r in sp.rules)
-    if any_versioned and schema_url_col is not None and not has_schema:
-        raise ValueError(
-            f"rule set has schema_url-versioned rules but column "
-            f"{schema_url_col!r} is not in the input ({df.columns}); pass "
-            "schema_url_col=None to opt into wildcard-only matching"
-        )
-
-    # Versioned dispatch DATA: one broadcast row per schema_url with the
-    # ordered applicable seq set.  Left join: a span whose version has no
-    # rule rows (or whose schema_url is NULL) gets NULL -> empty set.
-    dispatch_joined = False
-    if any_versioned and has_schema:
-        by_url: dict[str, list[int]] = {}
-        for seq, rule in enumerate(sp.rules):
-            if rule.schema_url:
-                by_url.setdefault(rule.schema_url, []).append(seq)
-        vseqs = spark.createDataFrame(
-            sorted((u, sorted(s)) for u, s in by_url.items()),
-            "schema_url string, __vseqs array<int>",
-        )
-        df = df.join(
-            F.broadcast(vseqs),
-            on=df[schema_url_col] == vseqs["schema_url"],
-            how="left",
-        ).drop(vseqs["schema_url"])
-        dispatch_joined = True
-    applicable_set = (
-        F.coalesce(F.col("__vseqs"), F.array().cast("array<int>"))
-        if dispatch_joined
-        else None
-    )
-
-    compiled = compile_rule_columns(cfg, attrs, name, kind)
-
-    # Same lazy first-match struct chain as apply_rules, each versioned
-    # rule's predicate gated on membership in the span's applicable set.
-    no_match = F.lit(None).cast(
-        "struct<rule_id:string,op_name:string,op_type:string>"
-    )
-    cascade = no_match
-    for seq in reversed(range(len(compiled))):
-        c = compiled[seq]
-        rule = sp.rules[seq]
-        hit = F.struct(
-            F.lit(c.rule_id).alias("rule_id"),
-            c.operation_name.alias("op_name"),
-            (
-                c.operation_type
-                if c.operation_type is not None
-                else F.lit(None).cast("string")
-            ).alias("op_type"),
-        )
-        pred = c.predicate
-        if rule.schema_url:
-            # versioned rule: applies only when the broadcast table lists it
-            # for this span's schema version (never, in wildcard-only mode)
-            gate = (
-                F.array_contains(applicable_set, F.lit(seq))
-                if applicable_set is not None
-                else F.lit(False)
-            )
-            pred = gate & pred
-        if c.name_nullable:
-            # name-expr error => skip this rule, next rule may still match
-            # (processor.go:244-250) — identical fold to the chain cascade
-            pred = pred & c.operation_name.isNotNull()
-        cascade = F.when(pred, hit).otherwise(cascade)
-
-    # skip-guard (processor.go:202-206)
-    guarded = F.when(attr(attrs, sp.operation_name_attribute).isNull(), cascade)
-
-    out = finish_match(df.withColumn("__match", guarded), cfg, attrs_col, name_col)
-    return out.drop("__vseqs") if dispatch_joined else out
+    return apply_rules(df, cfg, **kw)

@@ -38,12 +38,13 @@ import re
 import time
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import Config
 from ..plans.pipeline import build_normalized
-from ..operators.route import assign_sink
+from ..operators.route import sink_frame
 
 __all__ = [
     "SimulatedCrash",
@@ -66,10 +67,15 @@ class SimulatedCrash(RuntimeError):
 
 
 def read_manifest(spark: SparkSession, out_path: str) -> DataFrame | None:
+    """The lineage manifest, or None before the first chunk commits.  Any
+    other failure raises: an unreadable manifest must not silently re-run
+    every chunk."""
     try:
-        return spark.read.parquet(f"{out_path}/_manifest")
-    except Exception:
-        return None
+        return spark.read.schema(MANIFEST_SCHEMA).parquet(f"{out_path}/_manifest")
+    except AnalysisException as e:
+        if _is_path_not_found(e):
+            return None
+        raise
 
 
 def completed_chunks(spark: SparkSession, out_path: str) -> set[int]:
@@ -125,18 +131,12 @@ def chunk_input_files_by_day(spark: SparkSession, in_path: str) -> tuple[list[li
     return [grouped[d] for d in days], days
 
 
-def _is_path_not_found(e: Exception) -> bool:
+def _is_path_not_found(e: AnalysisException) -> bool:
     """True only for 'the path does not exist yet' analysis errors — any
     other read failure (permissions, corruption, transient FS) must NOT
     silently regenerate the plan: if the input listing drifted meanwhile,
     chunk ids already marked done in the manifest would map to different
     files, duplicating or dropping rows on resume."""
-    try:
-        from pyspark.errors import AnalysisException
-    except ImportError:  # pragma: no cover - very old pyspark
-        return "Path does not exist" in str(e)
-    if not isinstance(e, AnalysisException):
-        return False
     ec = ""
     try:
         getter = getattr(e, "getCondition", None) or e.getErrorClass
@@ -159,7 +159,7 @@ def _load_or_create_plan(
     try:
         plan_df = spark.read.parquet(f"{out_path}/_plan")
         rows = plan_df.collect()
-    except Exception as e:
+    except AnalysisException as e:
         if not _is_path_not_found(e):
             raise
         if chunk_by == "day":
@@ -285,19 +285,12 @@ def run_with_checkpoints(
         if chunk in done:
             continue
         t0 = time.time()
-        normalized = assign_sink(build_normalized(spark, chunk_df(chunk), cfg, extractor=extractor))
-        # same lossless sink projection as run_pipeline (binary ids, attr
-        # dedup) — resumed chunks must match fresh chunks byte-for-byte
-        from ..operators.route import slim_for_sink
-
-        normalized = slim_for_sink(normalized.drop("html", "text")).withColumn(
-            "warc_day", F.to_date(F.col("warc_ts"))
-        )
+        sinks = sink_frame(build_normalized(spark, chunk_df(chunk), cfg, extractor=extractor))
         # row count observed on the write plan itself — no post-write re-read
         obs = Observation(f"ckpt-{run_id}-{chunk}-{uuid.uuid4().hex[:8]}")
-        normalized = normalized.observe(obs, F.count(F.lit(1)).alias("rows"))
+        sinks = sinks.observe(obs, F.count(F.lit(1)).alias("rows"))
         # idempotent per-chunk commit: overwrite this chunk's subtree only
-        normalized.write.mode("overwrite").partitionBy("sink").parquet(
+        sinks.write.mode("overwrite").partitionBy("sink").parquet(
             f"{out_path}/data/chunk={chunk}"
         )
         n = obs.get["rows"]

@@ -9,6 +9,7 @@ Mirrors the reference's receiver -> [semconv, batch] -> exporters pipeline
       -> insert_attrs_if_absent   (resource processor, config.yaml:17-27)
       -> join_dims                (broadcast lookups)
       -> apply_rules              (compiled CASE cascade — processor.go parity)
+      -> sink_frame               (drop raw payloads, lossless slim, sink/day)
       -> write single-pass, partitioned by (sink, warc_day, lang)
       -> metrics from a pruned re-scan of the written sinks
 
@@ -23,6 +24,7 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,7 +40,7 @@ from ..operators.enrich import (
 )
 from ..operators.extract import extract_pages, extract_pages_native
 from ..operators.metrics import MetricsManifest, metrics_manifest
-from ..operators.route import write_routed_single_pass
+from ..operators.route import SINKS, sink_frame, write_per_sink_tables, write_routed_single_pass
 from ..operators.rules import apply_rules
 from ..tuning import ensure_jit_codegen
 
@@ -66,12 +68,12 @@ def build_normalized(
     cfg: Config | None = None,
     *,
     extractor: str = "pandas",
-    with_mappings: bool = True,
-    with_dims: bool = True,
     mappings_df: DataFrame | None = None,
     dims: list[tuple[DataFrame, str]] | None = None,
 ) -> DataFrame:
-    """The full transform plan, unexecuted (lazy).
+    """The full transform plan, unexecuted (lazy).  Every stage is
+    stateless or a broadcast (stream-static) join, so the same chain serves
+    a batch frame and a streaming one.
 
     ``mappings_df`` / ``dims`` let a long-lived driver (or the bench's timed
     region) build the tiny broadcast tables ONCE and reuse them across runs —
@@ -81,13 +83,11 @@ def build_normalized(
     ensure_jit_codegen(spark)
     extract = extract_pages if extractor == "pandas" else extract_pages_native
     df = extract(pages)
-    if with_mappings:
-        if mappings_df is None:
-            mappings_df = mappings_table(spark, default_semconv_mappings())
-        df = apply_semconv_mappings(df, mappings_df)
+    if mappings_df is None:
+        mappings_df = mappings_table(spark, default_semconv_mappings())
+    df = apply_semconv_mappings(df, mappings_df)
     df = insert_attrs_if_absent(df, RESOURCE_ATTRS)
-    if with_dims:
-        df = join_dims(df, *(dims if dims is not None else [(lang_dim(spark), "lang")]))
+    df = join_dims(df, *(dims if dims is not None else [(lang_dim(spark), "lang")]))
     return apply_rules(df, cfg)
 
 
@@ -100,7 +100,6 @@ def run_pipeline(
     run_id: str = "run-0",
     extractor: str = "pandas",
     approx_distinct: bool = False,
-    keep_raw: bool = False,
     catalog=None,
 ) -> PipelineResult:
     """End-to-end run.  Default sink = the single-pass partitioned parquet
@@ -110,57 +109,32 @@ def run_pipeline(
     re-reads the catalog tables (same pruned columns)."""
     cfg = cfg or reference_config()
     start = time.time()
-    normalized = build_normalized(spark, pages, cfg, extractor=extractor)
-    if not keep_raw:
-        # sinks carry NORMALIZED records, not raw payloads — the reference's
-        # exporters write processed spans, not the original request bytes.
-        # At 10^12 rows the raw html/text would dominate shuffle + sink IO.
-        # slim_for_sink then removes per-row redundancy losslessly (binary
-        # ids, attr entries that duplicate columns) — measured 45% fewer
-        # sink bytes, which is the pipeline's bandwidth bill at scale.
-        from ..operators.route import slim_for_sink
-
-        normalized = slim_for_sink(normalized.drop("html", "text"))
+    # sink_frame also slims the row losslessly (binary ids, attr entries
+    # that duplicate columns) — measured 45% fewer sink bytes, which is the
+    # pipeline's bandwidth bill at scale.
+    sinks = sink_frame(build_normalized(spark, pages, cfg, extractor=extractor))
     sink_path = f"{out_path}/sinks"
     if catalog is not None:
-        from ..operators.route import SINKS, write_per_sink_tables
-
-        tables = write_per_sink_tables(normalized, catalog=catalog)
-        routed = None
-        for sink in SINKS:
-            sub = catalog.read(spark, tables[sink]).withColumn("sink", F.lit(sink))
-            routed = sub if routed is None else routed.unionByName(sub)
-        duration = time.time() - start
-        metrics = metrics_manifest(
-            routed, cfg, run_id=run_id, duration_ms=duration * 1000.0, approx=approx_distinct
+        tables = write_per_sink_tables(sinks, catalog=catalog)
+        routed = reduce(
+            DataFrame.unionByName,
+            [catalog.read(spark, tables[s]).withColumn("sink", F.lit(s)) for s in SINKS],
         )
-        rows = metrics.summary.select("spans_processed").collect()[0][0]
-        metrics.summary.write.mode("overwrite").parquet(f"{out_path}/metrics/summary")
-        metrics.rule_effectiveness.write.mode("overwrite").parquet(
-            f"{out_path}/metrics/rule_effectiveness"
-        )
-        metrics.sink_counts.write.mode("overwrite").parquet(f"{out_path}/metrics/sink_counts")
-        return PipelineResult(catalog.base_path if hasattr(catalog, "base_path") else sink_path,
-                              metrics, rows, time.time() - start)
-    write_routed_single_pass(normalized, sink_path)
-
-    # aggregate stage over the written, partitioned output: reads only the
-    # pruned columns it needs (rule_id, operation_type, name, name_original,
-    # sink) — scan cost is a fraction of the raw data even at 10^12 rows.
-    try:
-        routed = spark.read.parquet(sink_path)
-    except Exception:
-        # empty input -> partitionBy wrote no files; keep the schema stable
-        from ..operators.route import assign_sink
-
-        schema = assign_sink(normalized).withColumn("warc_day", F.to_date("warc_ts")).schema
-        routed = spark.createDataFrame([], schema)
+        sink_path = getattr(catalog, "base_path", sink_path)
+    else:
+        write_routed_single_pass(sinks, sink_path)
+        # aggregate stage over the written, partitioned output: reads only
+        # the pruned columns it needs (rule_id, operation_type, name,
+        # name_original, sink) — scan cost is a fraction of the raw data even
+        # at 10^12 rows.  Explicit schema: an empty input leaves only
+        # _SUCCESS, which schema inference rejects; a missing path still
+        # raises.
+        routed = spark.read.schema(sinks.schema).parquet(sink_path)
     duration = time.time() - start
     metrics = metrics_manifest(
         routed, cfg, run_id=run_id, duration_ms=duration * 1000.0, approx=approx_distinct
     )
     rows = metrics.summary.select("spans_processed").collect()[0][0]
-    metrics.summary.write.mode("overwrite").parquet(f"{out_path}/metrics/summary")
-    metrics.rule_effectiveness.write.mode("overwrite").parquet(f"{out_path}/metrics/rule_effectiveness")
-    metrics.sink_counts.write.mode("overwrite").parquet(f"{out_path}/metrics/sink_counts")
+    for name in ("summary", "rule_effectiveness", "sink_counts"):
+        getattr(metrics, name).write.mode("overwrite").parquet(f"{out_path}/metrics/{name}")
     return PipelineResult(sink_path, metrics, rows, time.time() - start)

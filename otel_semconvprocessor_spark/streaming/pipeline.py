@@ -2,11 +2,12 @@
 
 The reference is a push-based stream (OTLP receiver -> processor -> exporters,
 config.yaml:215-232); the graft's primary mode is batch, but the same
-declarative plan runs unchanged as a stream: file-source pages -> extraction
-UDF -> broadcast mapping/dims (stream-static joins) -> rule cascade ->
-partitioned file sink.  The parquet file source + file sink pair gives
-exactly-once per-file processing through the checkpoint, which is the
-streaming twin of plans/checkpoint.py's per-chunk manifest resume.
+declarative plan runs unchanged as a stream: file-source pages ->
+``build_normalized`` (extraction UDF, broadcast mapping/dims as stream-static
+joins, rule cascade) -> ``sink_frame`` -> partitioned file sink.  The parquet
+file source + file sink pair gives exactly-once per-file processing through
+the checkpoint, which is the streaming twin of plans/checkpoint.py's
+per-chunk manifest resume.
 
 Also provides the watermarked windowed metrics aggregation (the streaming
 form of the M1/M2 counters): counts per (event-time day window, rule_id) with
@@ -21,22 +22,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..config import Config, reference_config
-from ..operators.enrich import (
-    apply_semconv_mappings,
-    default_semconv_mappings,
-    insert_attrs_if_absent,
-    join_dims,
-    lang_dim,
-    mappings_table,
-)
-from ..operators.extract import extract_pages
-from ..operators.route import assign_sink
-from ..operators.rules import apply_rules
-from ..plans.pipeline import RESOURCE_ATTRS
+from ..config import Config
+from ..operators.route import sink_frame
+from ..plans.pipeline import build_normalized
 from ..sources.pages import PAGES_SCHEMA
 
-__all__ = ["stream_pages", "streaming_normalized", "start_streaming_pipeline", "windowed_rule_counts"]
+__all__ = ["stream_pages", "start_streaming_pipeline", "windowed_rule_counts"]
 
 
 def stream_pages(spark: SparkSession, input_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
@@ -44,20 +35,6 @@ def stream_pages(spark: SparkSession, input_dir: str, max_files_per_trigger: int
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.parquet(input_dir)
-
-
-def streaming_normalized(spark: SparkSession, pages: DataFrame, cfg: Config | None = None) -> DataFrame:
-    """Identical transform chain to plans/pipeline.build_normalized —
-    extraction, broadcast mapping, resource attrs, the stream-static
-    broadcast dims join, and the rule cascade; every stage is stateless or
-    stream-static, so the one definition serves both batch and streaming
-    (tested column-for-column equal in tests/test_streaming.py)."""
-    cfg = cfg or reference_config()
-    df = extract_pages(pages)
-    df = apply_semconv_mappings(df, mappings_table(spark, default_semconv_mappings()))
-    df = insert_attrs_if_absent(df, RESOURCE_ATTRS)
-    df = join_dims(df, (lang_dim(spark), "lang"))
-    return apply_rules(df, cfg)
 
 
 def start_streaming_pipeline(
@@ -71,15 +48,7 @@ def start_streaming_pipeline(
     """File-source -> partitioned file-sink with checkpointed exactly-once;
     ``available_now`` drains the current backlog then stops (batch-like runs,
     incremental across restarts)."""
-    from ..operators.route import slim_for_sink
-
-    normalized = streaming_normalized(spark, stream_pages(spark, input_dir), cfg)
-    routed = (
-        # same sink projection as the batch path (drop raw payloads, binary
-        # ids, per-row attr dedup) so stream and batch sinks stay row-identical
-        slim_for_sink(assign_sink(normalized).drop("html", "text"))
-        .withColumn("warc_day", F.to_date("warc_ts"))
-    )
+    routed = sink_frame(build_normalized(spark, stream_pages(spark, input_dir), cfg))
     writer = (
         routed.writeStream.format("parquet")
         .option("path", f"{out_dir}/sinks")

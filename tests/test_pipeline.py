@@ -244,6 +244,39 @@ def test_sink_counts_match_python_oracle(spark, pages, tmp_path):
     assert got == expected
 
 
+def test_versioned_rule_skips_other_schema_version(spark, pages):
+    """The pipeline's cascade honours rule.schema_url: generated pages carry
+    schema.url 1.21.0 or 1.26.0, and HTTP rules versioned 1.21.0 must never
+    fire on a 1.26.0 span (the wildcard config shows they would)."""
+    cfg = reference_config()
+    http_rules = {r.id for r in cfg.span_processing.rules if r.operation_type == '"http"'}
+    for r in cfg.span_processing.rules:
+        if r.id in http_rules:
+            r.schema_url = "1.21.0"
+
+    def hits(c):
+        rows = build_normalized(spark, pages, c).select("schema_url", "rule_id").collect()
+        return {
+            v: sum(1 for r in rows if r["schema_url"] == v and r["rule_id"] in http_rules)
+            for v in ("1.21.0", "1.26.0")
+        }
+
+    assert hits(reference_config())["1.26.0"] > 0
+    got = hits(cfg)
+    assert got["1.26.0"] == 0
+    assert got["1.21.0"] > 0
+
+
+def test_run_pipeline_empty_input(spark, pages, tmp_path):
+    """Empty input writes no data files (only _SUCCESS); the metrics stage
+    still runs and writes a zero manifest."""
+    out = str(tmp_path / "empty")
+    res = run_pipeline(spark, pages.limit(0), out, run_id="empty")
+    assert res.rows == 0
+    assert spark.read.parquet(f"{out}/metrics/summary").collect()[0]["spans_processed"] == 0
+    assert spark.read.parquet(f"{out}/metrics/sink_counts").count() == 0
+
+
 @pytest.fixture(scope="module")
 def pages_path(spark, pages, tmp_path_factory):
     """File-backed pages input (the production checkpoint path is chunked by
@@ -375,6 +408,24 @@ def test_checkpoint_corrupt_plan_raises_not_regenerates(spark, pages_path, tmp_p
     for f in os.listdir(plan_dir):
         if f.endswith(".parquet"):
             with open(os.path.join(plan_dir, f), "wb") as fh:
+                fh.write(b"not a parquet file")
+    with pytest.raises(Exception) as ei:
+        run_with_checkpoints(spark, pages_path, out, n_chunks=4, run_id="resume")
+    assert "PATH_NOT_FOUND" not in str(ei.value)
+
+
+def test_checkpoint_corrupt_manifest_raises_not_reruns(spark, pages_path, tmp_path):
+    """An unreadable _manifest must PROPAGATE: treating it as 'no chunk done
+    yet' would silently re-run every committed chunk."""
+    import os
+
+    out = str(tmp_path / "ckpt-corrupt-manifest")
+    with pytest.raises(SimulatedCrash):
+        run_with_checkpoints(spark, pages_path, out, n_chunks=4, fail_after_chunk=0)
+    manifest_dir = f"{out}/_manifest"
+    for f in os.listdir(manifest_dir):
+        if f.endswith(".parquet"):
+            with open(os.path.join(manifest_dir, f), "wb") as fh:
                 fh.write(b"not a parquet file")
     with pytest.raises(Exception) as ei:
         run_with_checkpoints(spark, pages_path, out, n_chunks=4, run_id="resume")

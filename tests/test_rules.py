@@ -318,35 +318,3 @@ def test_preexisting_original_name_attr_is_overwritten(spark):
     assert row["name"] == "GET /test"
     assert row["attrs"]["name.original"] == "old_name"
     assert row["name_original"] == "old_name"
-
-
-def test_pre_project_keys_output_identical(spark):
-    """The attr-key pre-projection hook (measured slower on the reference
-    rule set, kept for key-heavy rule sets) must be output-identical to the
-    default lazy path."""
-    from otel_semconvprocessor_spark.config import reference_config
-    from otel_semconvprocessor_spark.operators.rules import apply_rules
-    from otel_semconvprocessor_spark.sources.docspans import doc_spans_sql
-
-    spark.read.parquet("/root/testdata/sf0.001/documents.parquet").createOrReplaceTempView(
-        "documents"
-    )
-    spans = spark.sql(doc_spans_sql("documents"))
-    from otel_semconvprocessor_spark.sources.docspans import ATTR_COLS
-    from pyspark.sql import functions as F
-
-    entries = [
-        F.struct(F.lit(k).alias("k"), F.col(c).alias("v"))
-        for c, k in ATTR_COLS.items()
-    ]
-    df = spans.select(
-        "doc_id", "kind", "name",
-        F.map_from_entries(
-            F.filter(F.array(*entries), lambda e: e["v"].isNotNull())
-        ).alias("attrs"),
-    )
-    cfg = reference_config()
-    cols = ["doc_id", "rule_id", "operation_name", "operation_type", "name", "name_original"]
-    a = sorted(map(tuple, apply_rules(df, cfg, pre_project_keys=False).select(*cols).collect()))
-    b = sorted(map(tuple, apply_rules(df, cfg, pre_project_keys=True).select(*cols).collect()))
-    assert a == b and len(a) > 0

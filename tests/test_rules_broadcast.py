@@ -1,53 +1,56 @@
-"""Broadcast rule-table cascade: equivalence with the CASE chain on the full
-docspans corpus, schema_url-keyed dispatch, and plan-shape gates (the rule
-table must broadcast, never shuffle the span side for the join)."""
+"""schema_url dispatch in the one rule cascade: the broadcast dispatch-join
+path equals the wildcard path on the full docspans corpus, versioned rules
+apply only to their own schema version, and plan-shape gates (the dispatch
+data must broadcast, never shuffle the span side for the join)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from otel_semconvprocessor_spark.config import (
     MODE_ENFORCE,
+    MODE_ENRICH,
     Config,
     OTTLRule,
     SpanProcessingConfig,
     reference_config,
 )
 from otel_semconvprocessor_spark.operators.rules import apply_rules
-from otel_semconvprocessor_spark.operators.rules_broadcast import (
-    apply_rules_broadcast,
-    rules_table,
-)
 from otel_semconvprocessor_spark.sources.docspans import doc_spans
 
 OUT_COLS = ["rule_id", "operation_name", "operation_type", "name", "name_original"]
 
 
-def _by_id(df, extra=()):
-    cols = ["doc_id", *OUT_COLS, *extra]
-    return {r["doc_id"]: tuple(r[c] for c in cols[1:]) for r in df.select(*cols).collect()}
+def _by_id(df):
+    rows = df.select("doc_id", *OUT_COLS, "attrs").collect()
+    return {r["doc_id"]: (*(r[c] for c in OUT_COLS), dict(r["attrs"])) for r in rows}
+
+
+def _assert_dispatch_equals_wildcard(spark, sf_dir, mode):
+    """Every rule versioned 1.26.0 and every span of that version: the
+    dispatch join lets every rule through, so the output (attrs map
+    included) must equal the all-wildcard cascade row for row."""
+    spans = doc_spans(spark, sf_dir)
+    wildcard = apply_rules(spans, reference_config(mode=mode))
+    versioned_cfg = reference_config(mode=mode)
+    for r in versioned_cfg.span_processing.rules:
+        r.schema_url = "1.26.0"
+    # non-foldable schema_url column, so the plan keeps the real equi-join
+    versioned_spans = spans.withColumn(
+        "schema_url", F.concat(F.lit("1.26."), (F.col("doc_id") * 0).cast("string"))
+    )
+    dispatched = apply_rules(versioned_spans, versioned_cfg)
+    plan = dispatched._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    a = _by_id(wildcard)
+    assert a and a == _by_id(dispatched)
 
 
 def test_broadcast_equals_case_chain_on_docspans(spark, sf_dir):
-    """The north_star cross-check: identical output to apply_rules on every
-    row of the derived span corpus, attrs map included."""
-    cfg = reference_config()
-    spans = doc_spans(spark, sf_dir)
-    chain = apply_rules(spans, cfg)
-    bcast = apply_rules_broadcast(spans, cfg, id_col="doc_id")
-    a = _by_id(chain)
-    b = _by_id(bcast)
-    assert a == b
-    attrs_a = {r["doc_id"]: dict(r["attrs"]) for r in chain.select("doc_id", "attrs").collect()}
-    attrs_b = {r["doc_id"]: dict(r["attrs"]) for r in bcast.select("doc_id", "attrs").collect()}
-    assert attrs_a == attrs_b
+    _assert_dispatch_equals_wildcard(spark, sf_dir, MODE_ENFORCE)
 
 
 def test_broadcast_equals_case_chain_enrich_mode(spark, sf_dir):
-    cfg = reference_config(mode="enrich")
-    spans = doc_spans(spark, sf_dir)
-    a = _by_id(apply_rules(spans, cfg))
-    b = _by_id(apply_rules_broadcast(spans, cfg, id_col="doc_id"))
-    assert a == b
+    _assert_dispatch_equals_wildcard(spark, sf_dir, MODE_ENRICH)
 
 
 def test_schema_url_keyed_dispatch(spark):
@@ -89,7 +92,7 @@ def test_schema_url_keyed_dispatch(spark):
         "doc_id long, name string, kind string, attrs map<string,string>, schema_url string",
     )
     out = {r["doc_id"]: (r["rule_id"], r["name"]) for r in
-           apply_rules_broadcast(df, cfg, id_col="doc_id").collect()}
+           apply_rules(df, cfg).collect()}
     assert out[1] == ("old_http", "OLD GET")
     assert out[2] == ("new_http", "NEW GET")
     assert out[3] == ("fallback", "FALLBACK")
@@ -117,18 +120,9 @@ def test_versioned_rules_missing_schema_col_raises(spark):
         "doc_id long, name string, kind string, attrs map<string,string>",
     )
     with pytest.raises(ValueError, match="schema_url"):
-        apply_rules_broadcast(df, cfg, id_col="doc_id")
-    out = apply_rules_broadcast(df, cfg, id_col="doc_id", schema_url_col=None).collect()
+        apply_rules(df, cfg)
+    out = apply_rules(df, cfg, schema_url_col=None).collect()
     assert out[0]["rule_id"] == "w"  # wildcard-only opt-out still works
-
-
-def test_rules_table_shape(spark):
-    cfg = reference_config()
-    t = rules_table(spark, cfg)
-    rows = t.collect()
-    assert len(rows) == 18
-    seqs = [r["seq"] for r in sorted(rows, key=lambda r: r["priority"])]
-    assert seqs == sorted(seqs)  # seq follows validated priority order
 
 
 def test_broadcast_plan_shape(spark, sf_dir):
@@ -139,7 +133,7 @@ def test_broadcast_plan_shape(spark, sf_dir):
     STILL never shuffles (the old shape paid x18 candidate amplification
     plus two id-keyed exchanges)."""
     cfg = reference_config()
-    out = apply_rules_broadcast(doc_spans(spark, sf_dir), cfg, id_col="doc_id")
+    out = apply_rules(doc_spans(spark, sf_dir), cfg)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "Join" not in plan
@@ -153,7 +147,7 @@ def test_broadcast_plan_shape(spark, sf_dir):
         "schema_url",
         F.when(F.col("doc_id") % 2 == 0, F.lit("1.26.0")).otherwise(F.lit("1.21.0")),
     )
-    out_v = apply_rules_broadcast(spans, versioned_cfg, id_col="doc_id")
+    out_v = apply_rules(spans, versioned_cfg)
     plan_v = out_v._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan_v
     assert "Exchange hashpartitioning" not in plan_v

@@ -2,13 +2,12 @@
 processing across restarts, and the watermarked windowed aggregation."""
 
 import pytest
-from pyspark.sql import functions as F
 
+from otel_semconvprocessor_spark.operators.route import sink_frame
 from otel_semconvprocessor_spark.plans.pipeline import build_normalized
 from otel_semconvprocessor_spark.sources.pages import generate_pages
 from otel_semconvprocessor_spark.streaming.pipeline import (
     start_streaming_pipeline,
-    streaming_normalized,
     stream_pages,
     windowed_rule_counts,
 )
@@ -27,23 +26,13 @@ def test_streaming_matches_batch(spark, staged_pages, tmp_path):
     """Full-row parity: every output column the batch pipeline produces
     (including the dims join's lang_name and the attrs map) must come out of
     the stream identically."""
-    from otel_semconvprocessor_spark.operators.route import assign_sink
-
     out = str(tmp_path / "out")
     q = start_streaming_pipeline(spark, staged_pages, out)
     q.awaitTermination(300)
     got = spark.read.parquet(f"{out}/sinks")
     assert got.count() == N
 
-    from otel_semconvprocessor_spark.operators.route import slim_for_sink
-
-    batch = (
-        slim_for_sink(
-            assign_sink(build_normalized(spark, spark.read.parquet(staged_pages)))
-            .drop("html", "text")
-        )
-        .withColumn("warc_day", F.to_date("warc_ts"))
-    )
+    batch = sink_frame(build_normalized(spark, spark.read.parquet(staged_pages)))
     assert set(batch.columns) == set(got.columns)
     cols = sorted(batch.columns)
 
@@ -80,7 +69,7 @@ def test_streaming_incremental_exactly_once(spark, staged_pages, tmp_path):
 
 
 def test_windowed_rule_counts_stream(spark, staged_pages):
-    normalized = streaming_normalized(spark, stream_pages(spark, staged_pages))
+    normalized = build_normalized(spark, stream_pages(spark, staged_pages))
     agg = windowed_rule_counts(normalized)
     q = (
         agg.writeStream.format("memory")
