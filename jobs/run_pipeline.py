@@ -9,7 +9,9 @@ Usage (local or cluster — the package ships via --py-files):
 
 With --rows and no --input, a deterministic synthetic pages table is
 generated (smoke/bench mode).  --checkpoint switches to the resumable
-per-chunk runner (plans/checkpoint.py).
+per-chunk runner (plans/checkpoint.py) and requires --input: the chunk plan
+is the input's file listing (one chunk per day of a day-partitioned input,
+else --chunks file groups), frozen in <output>/_plan.
 """
 
 from __future__ import annotations
@@ -29,6 +31,8 @@ def main() -> None:
     p.add_argument("--chunks", type=int, default=16)
     p.add_argument("--run-id", default=f"run-{int(time.time())}")
     args = p.parse_args()
+    if args.checkpoint and args.input is None:
+        p.error("--checkpoint requires --input (a file-backed parquet path)")
 
     from pyspark.sql import SparkSession
 
@@ -39,16 +43,16 @@ def main() -> None:
     from otel_semconvprocessor_spark.plans.pipeline import run_pipeline
     from otel_semconvprocessor_spark.sources.pages import generate_pages
 
-    pages = (
-        spark.read.parquet(args.input) if args.input else generate_pages(spark, args.rows)
-    )
     cfg = reference_config(mode=args.mode)
     if args.checkpoint:
         done = run_with_checkpoints(
-            spark, pages, args.output, cfg, n_chunks=args.chunks, run_id=args.run_id
+            spark, args.input, args.output, cfg, n_chunks=args.chunks, run_id=args.run_id
         )
         print(json.dumps({"run_id": args.run_id, "chunks_processed": done}))
     else:
+        pages = (
+            spark.read.parquet(args.input) if args.input else generate_pages(spark, args.rows)
+        )
         res = run_pipeline(spark, pages, args.output, cfg, run_id=args.run_id)
         print(
             json.dumps(

@@ -43,9 +43,12 @@ from ..tuning import ensure_jit_codegen
 
 __all__ = ["extract_pages", "extract_pages_native", "EXTRACTED_FIELDS"]
 
-ATTR_LINE_PATTERN = r"(?m)^([a-z][a-z0-9._]*): (.*)$"
-SERVER_PATTERN = r"(?m)^Server: (.*)$"
-TRACEPARENT_PATTERN = r"(?m)^traceparent: (00-[0-9a-f]{32}-[0-9a-f]{16}-[0-9a-f]{2})$"
+# (?d) is Java's UNIX_LINES: only "\n" ends a line for ^, $ and ., as in
+# Python's re.MULTILINE — without it "\r", U+0085 and U+2028 also end lines
+# and the twins disagree on CRLF and Unicode line-separator pages.
+ATTR_LINE_PATTERN = r"(?md)^([a-z][a-z0-9._]*): (.*)$"
+SERVER_PATTERN = r"(?md)^Server: (.*)$"
+TRACEPARENT_PATTERN = r"(?md)^traceparent: (00-[0-9a-f]{32}-[0-9a-f]{16}-[0-9a-f]{2})$"
 
 EXTRACTED_FIELDS = T.StructType(
     [
@@ -98,7 +101,9 @@ def _finish(df: DataFrame, ext: Column) -> Column | DataFrame:
 def extract_pages_native(df: DataFrame, text_col: str = "text", html_col: str = "html") -> DataFrame:
     ensure_jit_codegen(df.sparkSession)
     text = F.col(text_col)
-    html_text = F.decode(F.col(html_col), "UTF-8")
+    # invalid UTF-8 becomes U+FFFD (the pandas twin's decode "replace"); a
+    # strict decode aborts the whole job on one malformed page
+    html_text = F.make_valid_utf8(F.col(html_col).cast("string"))
 
     keys = F.regexp_extract_all(text, F.lit(ATTR_LINE_PATTERN), 1)
     vals = F.regexp_extract_all(text, F.lit(ATTR_LINE_PATTERN), 2)

@@ -33,7 +33,6 @@ __all__ = [
     "SINKS",
     "SINK_REDUNDANT_ATTR_KEYS",
     "assign_sink",
-    "route_predicates",
     "salt_expr",
     "salted_repartition",
     "sink_frame",
@@ -60,12 +59,6 @@ def sink_expr(op_type: Column, rule_id: Column) -> Column:
 
 def assign_sink(df: DataFrame) -> DataFrame:
     return df.withColumn("sink", sink_expr(F.col("operation_type"), F.col("rule_id")))
-
-
-def route_predicates() -> dict[str, Column]:
-    """Per-sink filter predicates for the separate-tables strategy."""
-    s = sink_expr(F.col("operation_type"), F.col("rule_id"))
-    return {sink: s == sink for sink in SINKS}
 
 
 def salt_expr(source: Column, salt_buckets: int, hash_fn: str = "xxhash64") -> Column:

@@ -5,13 +5,17 @@ pipeline must "resume from per-partition checkpoints with lineage + metrics
 manifests" (BASELINE.json north_star).
 
 Design (single-scan resume):
-  * the unit of checkpointing is a CHUNK OF INPUT FILES: the parquet file
-    list is enumerated once on the driver, sorted (deterministic across runs
-    and parallelism levels), and dealt round-robin into ``n_chunks`` groups.
-    Each chunk's job reads ONLY its own files (``spark.read.parquet(*files)``)
-    — a resumed run therefore scans exactly the unfinished chunks' bytes,
-    never the whole input.  At 100 TB this is the difference between "resume
-    costs one scan of the remaining data" and "n_chunks full corpus scans".
+  * the input is a parquet path and the unit of checkpointing is a CHUNK OF
+    ITS FILES: the file list is enumerated once on the driver.  When every
+    file sits under a ``warc_day=``/``warc_ts_day=``/``day=`` directory there
+    is one chunk per day (the per-partition checkpoint: lineage reads as
+    dates, a day's reprocess is one chunk overwrite); otherwise the sorted
+    list (deterministic across runs and parallelism levels) is dealt
+    round-robin into ``n_chunks`` groups.  Each chunk's job reads ONLY its
+    own files (``spark.read.parquet(*files)``) — a resumed run therefore
+    scans exactly the unfinished chunks' bytes, never the whole input.  At
+    100 TB this is the difference between "resume costs one scan of the
+    remaining data" and "n_chunks full corpus scans".
   * per-chunk row counts come from a ``pyspark.sql.Observation`` attached to
     the written plan (the write action itself produces the metric) — no
     post-write re-read.
@@ -21,15 +25,12 @@ Design (single-scan resume):
   * the chunk->files assignment is itself checkpoint state: it is written to
     ``_plan`` once at first run and resumed runs read it back, so resume is
     immune to file-listing drift (a file that disappeared after its chunk
-    committed cannot reshuffle the remaining chunks).
+    committed cannot reshuffle the remaining chunks).  A day-chunked plan
+    appends days that land after the first run as new chunks.
   * the lineage manifest (one parquet row per completed chunk: run_id, chunk,
     row_count, wall seconds, finished_at, and the chunk's input files) is
     appended strictly AFTER the chunk's data commit; on restart completed
     chunks are skipped by manifest lookup.
-  * an in-memory (non-file-backed) input DataFrame falls back to
-    deterministic hash chunking by ``pmod(xxhash64(url), n_chunks)`` — that
-    path re-filters the input per chunk and is intended for tests / small
-    inputs only; production inputs are tables on storage.
 """
 
 from __future__ import annotations
@@ -53,13 +54,13 @@ __all__ = [
     "deal_files",
     "chunk_input_files",
     "group_files_by_day",
-    "chunk_input_files_by_day",
 ]
 
 MANIFEST_SCHEMA = (
     "run_id string, chunk int, row_count long, wall_sec double, "
     "finished_at double, files string"
 )
+PLAN_SCHEMA = "chunk int, file string, label string"
 
 
 class SimulatedCrash(RuntimeError):
@@ -95,7 +96,8 @@ def deal_files(files: list[str], n_chunks: int) -> list[list[str]]:
 
 
 def chunk_input_files(spark: SparkSession, in_path: str, n_chunks: int) -> list[list[str]]:
-    """Deterministic file->chunk assignment over the actual input listing."""
+    """Round-robin file->chunk assignment over the actual input listing (the
+    chunking of an input that is not day-partitioned)."""
     return deal_files(spark.read.parquet(in_path).inputFiles(), n_chunks)
 
 
@@ -118,19 +120,6 @@ def group_files_by_day(files: list[str]) -> dict[str, list[str]] | None:
     return {d: sorted(fs) for d, fs in by_day.items()}
 
 
-def chunk_input_files_by_day(spark: SparkSession, in_path: str) -> tuple[list[list[str]], list[str]]:
-    """One chunk per warc_day partition (sorted by day).  Raises when the
-    input is not day-partitioned — the caller chose day-chunking explicitly."""
-    grouped = group_files_by_day(spark.read.parquet(in_path).inputFiles())
-    if grouped is None:
-        raise ValueError(
-            f"{in_path} is not day-partitioned (no warc_day=/day= path "
-            "component); use chunk_by='files'"
-        )
-    days = sorted(grouped)
-    return [grouped[d] for d in days], days
-
-
 def _is_path_not_found(e: AnalysisException) -> bool:
     """True only for 'the path does not exist yet' analysis errors — any
     other read failure (permissions, corruption, transient FS) must NOT
@@ -146,146 +135,111 @@ def _is_path_not_found(e: AnalysisException) -> bool:
     return "PATH_NOT_FOUND" in ec or "Path does not exist" in str(e)
 
 
+def _append_plan(
+    spark: SparkSession, out_path: str, first_id: int, chunks: list[list[str]], labels: list[str]
+) -> None:
+    spark.createDataFrame(
+        [(first_id + i, f, labels[i]) for i, fs in enumerate(chunks) for f in fs],
+        PLAN_SCHEMA,
+    ).write.mode("append").parquet(f"{out_path}/_plan")
+
+
 def _load_or_create_plan(
-    spark: SparkSession, in_path: str, out_path: str, n_chunks: int,
-    chunk_by: str = "files",
+    spark: SparkSession, files: list[str], out_path: str, n_chunks: int, done: set[int]
 ) -> tuple[list[list[str]], list[str]]:
-    """The chunk plan is checkpoint state: computed once at first run,
-    persisted to ``_plan`` (ONE ROW PER FILE — a 10^6-file input is a normal
-    10^6-row parquet table, not a multi-megabyte delimited string), and
-    reused verbatim on resume.  Returns (chunks, labels); labels are day
-    strings under ``chunk_by='day'`` and empty otherwise."""
-    plan_df = None
+    """The chunk plan is checkpoint state: computed once from the input
+    listing ``files`` at first run, persisted to ``_plan`` (ONE ROW PER FILE
+    — a 10^6-file input is a normal 10^6-row parquet table, not a
+    multi-megabyte delimited string), and reused verbatim on resume.
+    Returns (chunks, labels); labels are day strings for a day-partitioned
+    input and empty otherwise.  Completed chunks (``done``) with no plan
+    raise: a fresh plan would not map their ids to the files they read."""
     try:
         plan_df = spark.read.parquet(f"{out_path}/_plan")
         rows = plan_df.collect()
     except AnalysisException as e:
         if not _is_path_not_found(e):
             raise
-        if chunk_by == "day":
-            chunks, labels = chunk_input_files_by_day(spark, in_path)
-        elif chunk_by == "files":
-            chunks = chunk_input_files(spark, in_path, n_chunks)
-            labels = ["" for _ in chunks]
+        if done:
+            raise ValueError(
+                f"{out_path}/_manifest lists completed chunks {sorted(done)} but "
+                "there is no _plan mapping them to input files; reprocess from "
+                "a fresh out_path"
+            ) from e
+        grouped = group_files_by_day(files)
+        if grouped:
+            labels = sorted(grouped)
+            chunks = [grouped[d] for d in labels]
         else:
-            raise ValueError(f"chunk_by must be 'files' or 'day', got {chunk_by!r}")
-        spark.createDataFrame(
-            [(i, f, labels[i]) for i, fs in enumerate(chunks) for f in fs],
-            "chunk int, file string, label string",
-        ).write.mode("overwrite").parquet(f"{out_path}/_plan")
+            chunks = deal_files(files, n_chunks)
+            labels = ["" for _ in chunks]
+        _append_plan(spark, out_path, 0, chunks, labels)
         return chunks, labels
-    if "file" not in plan_df.columns:
-        if "files" in plan_df.columns:
-            # legacy (pre-r3) plan format: one row per chunk, files ';'-joined.
-            # The listing it froze is still authoritative — migrate in place.
-            plan = {}
-            lbl = {}
-            for r in rows:
-                for f in r["files"].split(";"):
-                    plan.setdefault(r["chunk"], []).append(f)
-                lbl[r["chunk"]] = ""
-            spark.createDataFrame(
-                [(c, f, "") for c, fs in plan.items() for f in fs],
-                "chunk int, file string, label string",
-            ).write.mode("overwrite").parquet(f"{out_path}/_plan")
-            return [sorted(plan[i]) for i in range(len(plan))], [lbl[i] for i in range(len(plan))]
+    if set(plan_df.columns) != {"chunk", "file", "label"}:
         raise ValueError(
             f"{out_path}/_plan has columns {plan_df.columns} — not a recognized "
-            "chunk-plan format (expected 'chunk, file, label' or the legacy "
-            "'chunk, files'); reprocess from a fresh out_path"
+            "chunk-plan format (expected 'chunk, file, label'); reprocess from "
+            "a fresh out_path"
         )
-    has_label = "label" in plan_df.columns
     plan: dict[int, list[str]] = {}
     lbl: dict[int, str] = {}
     for r in rows:
         plan.setdefault(r["chunk"], []).append(r["file"])
-        lbl[r["chunk"]] = r["label"] if has_label else ""
+        lbl[r["chunk"]] = r["label"]
     chunks = [sorted(plan[i]) for i in range(len(plan))]
     labels = [lbl[i] for i in range(len(plan))]
-    # Late-arriving days: under day-chunking the persisted plan is immutable
-    # for KNOWN days (their chunk ids/lineage are frozen), but a day that
-    # appears in the input listing AFTER the first run appends as a NEW chunk
-    # (new id, plan row appended) — the natural hypertable ingest pattern.
-    # Late files inside an already-planned day are NOT picked up: reprocess
-    # that day by deleting its manifest row (its chunk overwrite is
-    # idempotent).
-    if chunk_by == "day" and labels and all(labels):
-        grouped = group_files_by_day(spark.read.parquet(in_path).inputFiles())
-        if grouped:
-            known = set(labels)
-            new_days = sorted(d for d in grouped if d not in known)
-            if new_days:
-                new_rows = [
-                    (len(chunks) + i, f, d)
-                    for i, d in enumerate(new_days)
-                    for f in grouped[d]
-                ]
-                spark.createDataFrame(
-                    new_rows, "chunk int, file string, label string"
-                ).write.mode("append").parquet(f"{out_path}/_plan")
-                for d in new_days:
-                    chunks.append(sorted(grouped[d]))
-                    labels.append(d)
+    # Late-arriving days: a day-chunked plan is immutable for KNOWN days
+    # (their chunk ids/lineage are frozen), but a day that appears in the
+    # input listing AFTER the first run appends as a NEW chunk (new id, plan
+    # rows appended) — the natural hypertable ingest pattern.  Late files
+    # inside an already-planned day are NOT picked up: reprocess that day by
+    # deleting its manifest row (its chunk overwrite is idempotent).  A
+    # file-chunked plan (empty labels) stays as it was written.
+    if labels and all(labels):
+        grouped = group_files_by_day(files) or {}
+        known = set(labels)
+        new_days = sorted(d for d in grouped if d not in known)
+        if new_days:
+            new_chunks = [grouped[d] for d in new_days]
+            _append_plan(spark, out_path, len(chunks), new_chunks, new_days)
+            chunks += new_chunks
+            labels += new_days
     return chunks, labels
 
 
 def run_with_checkpoints(
     spark: SparkSession,
-    pages: DataFrame | str,
+    in_path: str,
     out_path: str,
     cfg: Config | None = None,
     *,
     n_chunks: int = 8,
     run_id: str = "ckpt-0",
-    extractor: str = "pandas",
     fail_after_chunk: int | None = None,
-    chunk_by: str = "files",
 ) -> list[int]:
-    """Process chunk-by-chunk with resume; returns chunks processed THIS call.
+    """Process the parquet input at ``in_path`` chunk-by-chunk with resume;
+    returns chunks processed THIS call.
 
-    ``pages``: a parquet path (production path — file-chunked, single-scan
-    resume) or a DataFrame (hash-chunked fallback for in-memory inputs).
-    ``chunk_by='day'`` makes one chunk per warc_day partition of a
-    day-partitioned input (lineage reads as dates; a day's reprocess is one
-    chunk overwrite); the default ``'files'`` deals the sorted file list
-    round-robin into ``n_chunks`` groups.
+    A day-partitioned input gets one chunk per day; any other input is dealt
+    into ``n_chunks`` file groups.  A persisted ``_plan`` overrides both.
     Skips chunks already in the manifest (possibly from a previous crashed
     run), overwrites any partial chunk output, and appends one manifest row
     per completed chunk.
     """
     done = completed_chunks(spark, out_path)
     processed: list[int] = []
+    src = spark.read.parquet(in_path)
+    chunks, labels = _load_or_create_plan(spark, src.inputFiles(), out_path, n_chunks, done)
 
-    if isinstance(pages, str):
-        chunks, labels = _load_or_create_plan(spark, pages, out_path, n_chunks, chunk_by)
-        schema = spark.read.parquet(pages).schema
-
-        def chunk_df(i: int) -> DataFrame:
-            # reads ONLY this chunk's files; explicit schema so empty/late
-            # chunks don't re-infer; basePath so partition columns (e.g.
-            # warc_day= dirs under day-chunking) still resolve from paths
-            return spark.read.schema(schema).option("basePath", pages).parquet(*chunks[i])
-
-        chunk_lineage = {
-            i: (f"day={labels[i]};" if labels[i] else "") + ";".join(chunks[i])
-            for i in range(len(chunks))
-        }
-        chunk_ids = range(len(chunks))
-    else:
-        # fallback: n_chunks filtered passes over the in-memory frame
-        chunk_of = F.pmod(F.xxhash64(F.col("url")), F.lit(n_chunks))
-
-        def chunk_df(i: int) -> DataFrame:
-            return pages.filter(chunk_of == i)
-
-        chunk_lineage = {i: f"hash:{i}/{n_chunks}" for i in range(n_chunks)}
-        chunk_ids = range(n_chunks)
-
-    for chunk in chunk_ids:
+    for chunk, files in enumerate(chunks):
         if chunk in done:
             continue
         t0 = time.time()
-        sinks = sink_frame(build_normalized(spark, chunk_df(chunk), cfg, extractor=extractor))
+        # reads ONLY this chunk's files; explicit schema so empty/late chunks
+        # don't re-infer; basePath so partition columns (e.g. warc_day= dirs)
+        # still resolve from paths
+        pages = spark.read.schema(src.schema).option("basePath", in_path).parquet(*files)
+        sinks = sink_frame(build_normalized(spark, pages, cfg))
         # row count observed on the write plan itself — no post-write re-read
         obs = Observation(f"ckpt-{run_id}-{chunk}-{uuid.uuid4().hex[:8]}")
         sinks = sinks.observe(obs, F.count(F.lit(1)).alias("rows"))
@@ -294,8 +248,9 @@ def run_with_checkpoints(
             f"{out_path}/data/chunk={chunk}"
         )
         n = obs.get["rows"]
+        lineage = (f"day={labels[chunk]};" if labels[chunk] else "") + ";".join(files)
         manifest_row = spark.createDataFrame(
-            [(run_id, chunk, n, time.time() - t0, float(time.time()), chunk_lineage[chunk])],
+            [(run_id, chunk, n, time.time() - t0, float(time.time()), lineage)],
             MANIFEST_SCHEMA,
         )
         manifest_row.write.mode("append").parquet(f"{out_path}/_manifest")

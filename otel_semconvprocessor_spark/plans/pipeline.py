@@ -98,7 +98,6 @@ def run_pipeline(
     cfg: Config | None = None,
     *,
     run_id: str = "run-0",
-    extractor: str = "pandas",
     approx_distinct: bool = False,
     catalog=None,
 ) -> PipelineResult:
@@ -112,7 +111,7 @@ def run_pipeline(
     # sink_frame also slims the row losslessly (binary ids, attr entries
     # that duplicate columns) — measured 45% fewer sink bytes, which is the
     # pipeline's bandwidth bill at scale.
-    sinks = sink_frame(build_normalized(spark, pages, cfg, extractor=extractor))
+    sinks = sink_frame(build_normalized(spark, pages, cfg))
     sink_path = f"{out_path}/sinks"
     if catalog is not None:
         tables = write_per_sink_tables(sinks, catalog=catalog)

@@ -22,9 +22,11 @@ pipeline change:
     = overwrite the tree, append = append files, overwritePartitions =
     dynamic partition overwrite.
 
-Both run the same explicit repartition-before-write (see
+``ParquetDirCatalog`` runs the explicit repartition-before-write (see
 operators/route.py) so file counts stay O(partitions), not O(tasks x
-partitions).
+partitions).  ``IcebergCatalog`` passes the frame to ``writeTo`` unchanged:
+the clustering is the table's own write distribution
+(``write.distribution-mode``).
 """
 
 from __future__ import annotations
@@ -109,8 +111,6 @@ class IcebergCatalog(SinkCatalog):
 
     catalog: str = "local"
     namespace: str = "sinks"
-    files_per_partition: int = 1
-    salt_source: str = "url"
 
     def _ident(self, table: str) -> str:
         return f"{self.catalog}.{self.namespace}.{table}"

@@ -37,6 +37,28 @@ def test_insert_attrs_if_absent(spark):
     assert attrs["other"] == "x"
 
 
+def test_insert_attrs_if_absent_none_value_raises(spark):
+    """Insert-if-absent of "no value" has no meaning; the constant-map fast
+    path used to insert k -> NULL where the per-row path skipped k."""
+    df = _df(spark, [("s", {"x": "1"})])
+    with pytest.raises(ValueError, match=r"no value given for \['k'\]"):
+        insert_attrs_if_absent(df, {"k": None, "j": "v"})
+
+
+def test_insert_attrs_if_absent_empty_value_same_on_every_branch(spark):
+    """An empty-string value is a value: inserted alike on NULL attrs, on
+    attrs holding none of the keys (both constant-map paths) and on attrs
+    holding some of them (the per-row path)."""
+    df = _df(spark, [("null", None), ("none", {"x": "1"}), ("some", {"k": "pre"})])
+    out = insert_attrs_if_absent(df, {"k": "", "j": "v"})
+    got = {r["schema_url"]: dict(r["attrs"]) for r in out.collect()}
+    assert got == {
+        "null": {"k": "", "j": "v"},
+        "none": {"x": "1", "k": "", "j": "v"},
+        "some": {"k": "pre", "j": "v"},
+    }
+
+
 def test_mapping_rename(spark):
     maps = mappings_table(spark, [SemconvMapping("1.21.0", "rename", "http.method", "http.request.method")])
     df = _df(spark, [("1.21.0", {"http.method": "GET", "x": "1"}), ("1.26.0", {"http.method": "GET"})])

@@ -144,3 +144,45 @@ def test_dedup_fast_path_mixed_rows(spark):
     p = {r["url"]: dict(r["attrs"]) for r in extract_pages(df).select("url", "attrs").collect()}
     n = {u: dict(r["attrs"]) for u, r in rows.items()}
     assert p == n
+
+
+def test_pandas_native_parity_on_hostile_input(spark):
+    """Parity beyond the generator's clean pages: line ends other than "\\n"
+    (CRLF, U+2028, U+0085) are line content for both twins, duplicate keys
+    keep the last value, NULL text/html extract nothing, and html that is not
+    valid UTF-8 decodes with U+FFFD instead of aborting the job."""
+    tp = "00-" + "ab" * 16 + "-" + "cd" * 8 + "-01"
+    rows = [
+        ("https://ex.com/crlf",
+         "span.name: s\r\nspan.kind: server\r\nhttp.method: GET\r\n",
+         f"Server: nginx\r\ntraceparent: {tp}\r\n".encode()),
+        ("https://ex.com/u2028",
+         "span.name: a b\nhttp.method: GET x: y\n",
+         f"Server: a b\ntraceparent: {tp}\n".encode()),
+        ("https://ex.com/u0085",
+         "span.name: a\u0085b\nk.a: v\u0085k.b: w\n",
+         f"Server: a\u0085b\n".encode()),
+        ("https://ex.com/dup",
+         "span.name: d\nk.a: 1\nk.a: 2\nk.a: 3",
+         b"<html></html>"),
+        ("https://ex.com/null", None, None),
+        ("https://ex.com/invalid",
+         "span.name: i\nk.a: 1",
+         b"Server: ng\xffinx\ntraceparent: " + tp.encode() + b"\n"),
+        ("https://ex.com/truncated",
+         "span.name: t",
+         b"traceparent: " + tp.encode() + b"\nServer: caf\xc3"),
+        ("https://ex.com/mixed",
+         "span.name: m\nhttp.method: POST",
+         b"Server: \xe2\x82\xac \xe2\x82 ok\xc3\xa9\xed\xa0\x80\xf0\x9f\x98\n"),
+    ]
+    df = spark.createDataFrame(rows, "url string, text string, html binary")
+    cols = ["url", "domain", "name", "kind", "schema_url", "trace_id", "span_id"]
+    pa = {r["url"]: r for r in extract_pages(df).select(*cols, "attrs").collect()}
+    pb = {r["url"]: r for r in extract_pages_native(df).select(*cols, "attrs").collect()}
+    assert pa.keys() == pb.keys() == {r[0] for r in rows}
+    for url in pa:
+        assert pa[url].asDict() == pb[url].asDict(), url
+    assert pa["https://ex.com/crlf"]["attrs"]["http.method"] == "GET\r"
+    assert pa["https://ex.com/dup"]["attrs"]["k.a"] == "3"
+    assert pa["https://ex.com/invalid"]["attrs"]["http.server"] == "ng\ufffdinx"

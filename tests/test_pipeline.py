@@ -363,8 +363,8 @@ def test_deal_files_10k_listing():
 
 
 def test_checkpoint_day_chunking(spark, pages, tmp_path):
-    """chunk_by='day': one chunk per warc_day partition of a day-partitioned
-    input; lineage carries the day; crash/resume works per day."""
+    """A day-partitioned input gets one chunk per warc_day partition;
+    lineage carries the day; crash/resume works per day."""
     from pyspark.sql import functions as F
 
     from otel_semconvprocessor_spark.plans.checkpoint import read_manifest
@@ -377,8 +377,8 @@ def test_checkpoint_day_chunking(spark, pages, tmp_path):
 
     out = str(tmp_path / "ckpt-day")
     with pytest.raises(SimulatedCrash):
-        run_with_checkpoints(spark, in_path, out, chunk_by="day", fail_after_chunk=0)
-    done = run_with_checkpoints(spark, in_path, out, chunk_by="day", run_id="resume")
+        run_with_checkpoints(spark, in_path, out, fail_after_chunk=0)
+    done = run_with_checkpoints(spark, in_path, out, run_id="resume")
     assert len(done) == n_days - 1
     assert read_all_output(spark, out).count() == N
     manifest = read_manifest(spark, out)
@@ -387,11 +387,6 @@ def test_checkpoint_day_chunking(spark, pages, tmp_path):
     assert all(l.startswith("day=") for l in lineages)
     days_in_lineage = {l.split(";")[0] for l in lineages}
     assert len(days_in_lineage) == n_days
-
-
-def test_checkpoint_day_chunking_requires_partitioned_input(spark, pages_path, tmp_path):
-    with pytest.raises(ValueError, match="not day-partitioned"):
-        run_with_checkpoints(spark, pages_path, str(tmp_path / "x"), chunk_by="day")
 
 
 def test_checkpoint_corrupt_plan_raises_not_regenerates(spark, pages_path, tmp_path):
@@ -414,6 +409,23 @@ def test_checkpoint_corrupt_plan_raises_not_regenerates(spark, pages_path, tmp_p
     assert "PATH_NOT_FOUND" not in str(ei.value)
 
 
+def test_checkpoint_manifest_without_plan_raises(spark, pages_path, tmp_path):
+    """Completed chunks with no _plan (an output directory whose chunks were
+    not file chunks, or whose plan was lost) raise: a plan made now from the
+    current listing would map the done chunk ids to other files, silently
+    dropping and duplicating rows on resume."""
+    import os
+    import shutil
+
+    out = str(tmp_path / "ckpt-no-plan")
+    with pytest.raises(SimulatedCrash):
+        run_with_checkpoints(spark, pages_path, out, n_chunks=4, fail_after_chunk=0)
+    shutil.rmtree(f"{out}/_plan")
+    with pytest.raises(ValueError, match=r"completed chunks \[0\] but there is no _plan"):
+        run_with_checkpoints(spark, pages_path, out, n_chunks=4, run_id="resume")
+    assert sorted(os.listdir(f"{out}/data")) == ["chunk=0"]
+
+
 def test_checkpoint_corrupt_manifest_raises_not_reruns(spark, pages_path, tmp_path):
     """An unreadable _manifest must PROPAGATE: treating it as 'no chunk done
     yet' would silently re-run every committed chunk."""
@@ -430,15 +442,6 @@ def test_checkpoint_corrupt_manifest_raises_not_reruns(spark, pages_path, tmp_pa
     with pytest.raises(Exception) as ei:
         run_with_checkpoints(spark, pages_path, out, n_chunks=4, run_id="resume")
     assert "PATH_NOT_FOUND" not in str(ei.value)
-
-
-def test_checkpoint_dataframe_fallback(spark, pages, tmp_path):
-    """In-memory (non-file-backed) inputs hash-chunk and still resume."""
-    out = str(tmp_path / "ckpt3")
-    with pytest.raises(SimulatedCrash):
-        run_with_checkpoints(spark, pages, out, n_chunks=2, fail_after_chunk=0)
-    assert run_with_checkpoints(spark, pages, out, n_chunks=2) == [1]
-    assert read_all_output(spark, out).select("url").distinct().count() == N
 
 
 def test_checkpoint_late_day_appends_new_chunk(spark, pages, tmp_path):
@@ -458,7 +461,7 @@ def test_checkpoint_late_day_appends_new_chunk(spark, pages, tmp_path):
     ).parquet(in_path)
 
     out = str(tmp_path / "late-day-out")
-    done1 = run_with_checkpoints(spark, in_path, out, chunk_by="day", run_id="r1")
+    done1 = run_with_checkpoints(spark, in_path, out, run_id="r1")
     assert len(done1) == len(first)
     n1 = read_all_output(spark, out).count()
 
@@ -466,7 +469,7 @@ def test_checkpoint_late_day_appends_new_chunk(spark, pages, tmp_path):
     staged.filter(F.col("warc_day") == late).write.mode("append").partitionBy(
         "warc_day"
     ).parquet(in_path)
-    done2 = run_with_checkpoints(spark, in_path, out, chunk_by="day", run_id="r2")
+    done2 = run_with_checkpoints(spark, in_path, out, run_id="r2")
     assert done2 == [len(first)]  # exactly one NEW chunk id, appended at the end
     assert read_all_output(spark, out).count() == N
     assert read_all_output(spark, out).count() > n1
@@ -476,31 +479,70 @@ def test_checkpoint_late_day_appends_new_chunk(spark, pages, tmp_path):
     assert late_lineage and late_lineage[0].startswith(f"day={late}")
 
 
-def test_checkpoint_legacy_plan_format_migrates(spark, pages_path, tmp_path):
-    """A _plan written by the pre-r3 format (one row per chunk, files
-    ';'-joined) must still resume — it is migrated in place, not crashed on."""
+def test_checkpoint_legacy_plan_format_raises(spark, pages_path, tmp_path):
+    """A _plan in any other format — the pre-r3 one row per chunk with files
+    ';'-joined, or one row per file without labels — raises and is never
+    regenerated; no committed chunk re-runs."""
     import os
 
     out = str(tmp_path / "ckpt-legacy")
     with pytest.raises(SimulatedCrash):
         run_with_checkpoints(spark, pages_path, out, n_chunks=4, fail_after_chunk=1)
+    from otel_semconvprocessor_spark.plans.checkpoint import read_manifest
 
-    # rewrite the plan in the legacy shape
     plan = spark.read.parquet(f"{out}/_plan").collect()
     by_chunk = {}
     for r in plan:
         by_chunk.setdefault(r["chunk"], []).append(r["file"])
-    legacy = [(c, ";".join(sorted(fs))) for c, fs in by_chunk.items()]
-    spark.createDataFrame(legacy, "chunk int, files string").write.mode(
-        "overwrite"
-    ).parquet(f"{out}/_plan")
+    legacy_formats = {
+        ("chunk", "files"): [(c, ";".join(sorted(fs))) for c, fs in by_chunk.items()],
+        ("chunk", "file"): [(r["chunk"], r["file"]) for r in plan],
+    }
+    for cols, rows in legacy_formats.items():
+        spark.createDataFrame(rows, list(cols)).write.mode("overwrite").parquet(f"{out}/_plan")
+        with pytest.raises(ValueError, match="reprocess from a fresh out_path"):
+            run_with_checkpoints(spark, pages_path, out, n_chunks=4, run_id="resume")
+        assert tuple(spark.read.parquet(f"{out}/_plan").columns) == cols  # not regenerated
+        assert sorted(r["chunk"] for r in read_manifest(spark, out).collect()) == [0, 1]
+        assert sorted(os.listdir(f"{out}/data")) == ["chunk=0", "chunk=1"]
 
-    done = run_with_checkpoints(spark, pages_path, out, n_chunks=4, run_id="resume")
-    assert sorted(done) == [2, 3]
+
+def test_run_pipeline_cli_checkpoint(spark, pages_path, tmp_path):
+    """jobs/run_pipeline.py --checkpoint chunks the --input files: the plan is
+    persisted, lineage names the parquet files, every row lands once; without
+    --input it is a usage error (exit 2) before any Spark work."""
+    import os
+    import subprocess
+    import sys
+
+    from otel_semconvprocessor_spark.plans.checkpoint import read_manifest
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    job = os.path.join(repo, "jobs", "run_pipeline.py")
+    env = dict(
+        os.environ,
+        PYTHONPATH=os.pathsep.join(p for p in (repo, os.environ.get("PYTHONPATH")) if p),
+        PYSPARK_SUBMIT_ARGS="--master local[2] --conf spark.ui.enabled=false pyspark-shell",
+    )
+    out = str(tmp_path / "cli-out")
+    run = subprocess.run(
+        [sys.executable, job, "--input", pages_path, "--output", out, "--checkpoint",
+         "--chunks", "2", "--run-id", "cli"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert os.path.isdir(f"{out}/_plan")
+    lineages = [r["files"] for r in read_manifest(spark, out).collect()]
+    assert len(lineages) == 2
+    assert all(".parquet" in l and not l.startswith("hash:") for l in lineages)
     assert read_all_output(spark, out).count() == N
-    # and the plan is now the current one-row-per-file format
-    migrated = spark.read.parquet(f"{out}/_plan")
-    assert set(migrated.columns) == {"chunk", "file", "label"}
+
+    usage = subprocess.run(
+        [sys.executable, job, "--output", str(tmp_path / "x"), "--checkpoint"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert usage.returncode == 2
+    assert "--checkpoint requires --input" in usage.stderr
 
 
 def test_slim_for_sink_is_lossless(spark):
